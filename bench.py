@@ -20,11 +20,11 @@ exceeded the driver's 2000-char stdout tail):
 Each query is fully materialized (count of collected rows) so the
 timing covers the whole plan, not just planning.
 
-Timed runs are COLD with respect to every session memo:
-``entrymod.reset_session_caches()`` runs before each timed repetition
-(round-12 verdict #1 — previously the best-of-N min over memo-backed
-queries recorded a cache-hit read, e.g. q_pagerank at 0.046 s vs its
-real 7-12 s cost).
+Timed runs are COLD: ``entrymod.reset_session_caches()`` drops the
+persisted edge tables and releases the operator persists before each
+timed repetition (round-12 verdict #1 — a best-of-N min over persisted
+state records a cache read, e.g. q_pagerank at 0.046 s vs its real
+7-12 s cost).
 """
 
 from __future__ import annotations
@@ -77,11 +77,11 @@ def main() -> None:
         runs: list[float] = []
         n = -1
         for i in range(3):
-            # De-game the timing (round-12 verdict #1): drop every
-            # session memo (result caches + persisted edge tables)
-            # before EACH timed run, so run 2+ rebuilds from the
-            # parquet scans exactly like run 1 and min() reflects the
-            # query's true cost, never a cache read.
+            # De-game the timing (round-12 verdict #1): drop the
+            # persisted edge tables and operator persists before EACH
+            # timed run, so run 2+ rebuilds from the parquet scans
+            # exactly like run 1 and min() reflects the query's true
+            # cost, never a cache read.
             entrymod.reset_session_caches()
             graphalgs.LOOP_STATS.clear()
             t0 = time.time()

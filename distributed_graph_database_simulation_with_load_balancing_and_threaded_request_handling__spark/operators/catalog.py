@@ -30,12 +30,18 @@ class GraphCatalog:
     """A graph database rooted at a Parquet path, one partition per
     graph_id.
 
-    Single-writer assumption (documented contract): like the reference's
-    one primary server owning all mutations (primary_server.c:68), the
-    catalog assumes one writer at a time.  ``add_graph`` re-probes the
-    target partition directory immediately before writing to narrow the
-    check-then-write window, but two truly concurrent writers racing on
-    the same graph_id are outside the contract (the loser's partition is
+    Writers to DIFFERENT graph ids may run concurrently on one session:
+    each write carries dynamic partition overwrite as a per-write
+    option, so it replaces only its own graph's partition and leaves
+    the session conf alone.
+
+    Single-writer assumption per graph id (documented contract): like
+    the reference's one primary server owning all mutations
+    (primary_server.c:68), the catalog assumes one writer at a time
+    for a given graph.  ``add_graph`` re-probes the target partition
+    directory immediately before writing to narrow the check-then-write
+    window, but two truly concurrent writers racing on the same
+    graph_id are outside the contract (the loser's partition is
     atomically replaced, not interleaved — Parquet partition commits
     stay atomic either way)."""
 
@@ -94,20 +100,15 @@ class GraphCatalog:
 
     def _write(self, graph_id: int, pairs: DataFrame) -> None:
         edges = edges_from_pairs(pairs, graph_id=graph_id, symmetric=True)
-        # Scoped set/restore: dynamic partition overwrite (only the
-        # mutated graph's partition is replaced) without mutating the
-        # shared session's overwrite semantics for other writers.
-        key = "spark.sql.sources.partitionOverwriteMode"
-        prev = self.spark.conf.get(key, None)
-        self.spark.conf.set(key, "dynamic")
-        try:
-            (
-                edges.write.mode("overwrite")
-                .partitionBy("graph_id")
-                .parquet(self.path)
-            )
-        finally:
-            self.spark.conf.set(key, prev) if prev is not None else self.spark.conf.unset(key)
+        # Dynamic partition overwrite as a per-write option: only the
+        # mutated graph's partition is replaced, and the shared
+        # session's conf is never touched.
+        (
+            edges.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("graph_id")
+            .parquet(self.path)
+        )
 
     def edges(self, graph_id: int | None = None) -> DataFrame:
         df = self.spark.read.schema(GRAPH_EDGES_SCHEMA).parquet(self.path)

@@ -489,9 +489,11 @@ def dedup_clusters(
     sym = edges.unionAll(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    # co_partition (r13): no per-round broadcast build of the label
-    # table; the pair-graph edge side is shuffled once instead.
-    comp = connected_components(sym, co_partition=True)
+    # Co-partitioned at the session's shuffle width (r13): no
+    # per-round broadcast build of the label table; the pair-graph
+    # edge side is shuffled once instead.
+    width = int(sym.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    comp = connected_components(sym, loop_shuffle_partitions=width)
     out = comp.select(
         F.col("vertex").alias(id_col), F.col("component").alias("cluster_id")
     )

@@ -14,11 +14,11 @@ session MEMORY_AND_DISK blocks from hundreds of operator calls can
 accumulate until GC happens to run (round-12 verdict #7).  This
 registry makes the release explicit: operators register each such
 persist via ``tracked_persist``, and harness boundaries — the bench's
-per-run cache reset, a serving loop between requests — call
+reset before each timed run, a serving loop between requests — call
 ``release_operator_persists()`` once the previous result has been
-consumed.  The one-live-result contract matches the session caches:
-a caller holding a result across a release boundary re-executes from
-the (unpersisted) lineage, which is correct, just slower.
+consumed.  One live result at a time: a caller holding a result
+across a release boundary re-executes from the (unpersisted)
+lineage, which is correct, just slower.
 """
 
 from __future__ import annotations
@@ -40,8 +40,8 @@ def tracked_persist(df: DataFrame) -> DataFrame:
 
 def release_operator_persists() -> int:
     """Unpersist every tracked block; returns how many were released.
-    BLOCKING: callers are harness boundaries (the bench's per-run
-    reset), and an async release would overlap the NEXT timed run with
+    BLOCKING: callers are harness boundaries (the bench's reset before
+    each timed run), and an async release would overlap the NEXT timed run with
     block-removal work — the removal must finish outside the timed
     region.  Safe to call with the session already stopped
     (best-effort)."""

@@ -208,7 +208,7 @@ def bfs_levels_multi(
     *,
     undirected: bool = True,
     probe_every: int = 1,
-    co_partition: bool = False,
+    loop_shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Multi-source BFS: one level-synchronous loop for ANY number of
     (graph_id, start) traversals at once — the set-oriented form of the
@@ -231,25 +231,26 @@ def bfs_levels_multi(
     contract: identical result, probe action amortized; use on deep
     traversals) — and, with ``undirected`` (default — canonical edge
     lists are symmetric), last-two-frontiers dedup per traversal (see
-    ``bfs_levels``).
+    ``bfs_levels``).  ``loop_shuffle_partitions`` co-partitions the
+    edge side at that width (below); the session's shuffle width is
+    left to the caller.
     """
-    spark = edges.sparkSession
-    # ``co_partition`` (r13, guide §2.4 — the betweenness_sampled /
-    # pagerank_fixed_both posture): shuffle the edge side ONCE into the
-    # session's current shuffle width keyed on (graph_id, src) and hint
-    # the expansion join SHUFFLE_HASH, so each superstep shuffles only
-    # the frontier instead of collecting it to the driver for a
-    # broadcast build per level.  Worth it on DEEP loops (A/B at
-    # sf0.1: the 18-superstep assignment replay −8%, shallow 4-6-level
-    # dispatch traversals neutral — leave False there).
+    # ``loop_shuffle_partitions`` (r13, guide §2.4 — the
+    # betweenness_sampled / pagerank_fixed_both posture): shuffle the
+    # edge side ONCE into that many partitions keyed on (graph_id, src)
+    # and hint the expansion join SHUFFLE_HASH, so each superstep
+    # shuffles only the frontier instead of collecting it to the
+    # driver for a broadcast build per level.  Worth it on DEEP loops
+    # (A/B at sf0.1: the 18-superstep assignment replay −8%, shallow
+    # 4-6-level dispatch traversals neutral — leave None there).
+    copart = loop_shuffle_partitions is not None
     e = edges.select(
         F.col("graph_id").cast("int").alias("graph_id"),
         F.col("src").cast("long").alias("src"),
         F.col("dst").cast("long").alias("dst"),
     )
-    if co_partition:
-        _w = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        e = e.repartition(_w, "graph_id", "src")
+    if copart:
+        e = e.repartition(int(loop_shuffle_partitions), "graph_id", "src")
     e = e.persist()
     try:
         src0 = sources.select(
@@ -277,7 +278,7 @@ def bfs_levels_multi(
         done = False
         while not done:
             level += 1
-            flhs = frontier.hint("shuffle_hash") if co_partition else frontier
+            flhs = frontier.hint("shuffle_hash") if copart else frontier
             neighbors = (
                 flhs.join(
                     e,
@@ -579,9 +580,8 @@ def connected_components(
     *,
     graph_id: int | None = None,
     max_iters: int = 50,
-    pointer_jumping: bool = False,
     probe_every: int = 1,
-    co_partition: bool = False,
+    loop_shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Connected components by hash-min label propagation (the
     canonical Pregel algorithm; GraphX `connectedComponents` computes
@@ -595,22 +595,11 @@ def connected_components(
     silently makes (secondary_server.c:96-97), checked instead of
     assumed.
 
-    ``pointer_jumping`` adds the path-doubling term: each round also
-    adopts ``L(L(v))`` (the label of the vertex its label points at),
-    via one extra labels-to-labels join per round — label-chain depth
-    halves per round, so convergence drops from O(diameter) rounds to
-    O(log diameter).  Same unique fixpoint (min id per component; the
-    extra term only ever propagates an existing smaller label), so
-    any SQL oracle for the plain form holds verbatim.  Worth the
-    ~1.7x per-round cost exactly when the diameter is non-trivial —
-    the 100-TB long-chain regime; leave False for shallow graphs.
-
     Scale: each round is one (labels ⋈ edges) shuffle keyed on the
-    vertex + a min-aggregation — both partial-aggregated (+ the
-    doubling join when enabled); rounds ≈ diameter (or its log),
-    labels are localCheckpointed so lineage stays flat.  Convergence
-    is a ``_changed`` flag summed in the SAME action that materializes
-    the round's checkpoint — one Spark job per round, no separate
+    vertex + a min-aggregation — both partial-aggregated; rounds ≈
+    diameter, labels are localCheckpointed so lineage stays flat.
+    Convergence is a ``_changed`` flag summed in the SAME action that
+    materializes the round's checkpoint — one Spark job per round, no separate
     old-vs-new join probe.  ``probe_every`` chains that many rounds
     between probes (the sssp contract: every chained round keeps its
     lazy localCheckpoint, only the probe ACTION is amortized; a round
@@ -619,20 +608,22 @@ def connected_components(
     probe_every - 1 no-op rounds of plan overhead after convergence —
     worth it where the per-action scheduling floor dominates, e.g.
     the component-pair merge graphs inside max_spanning_forest).
+    ``loop_shuffle_partitions`` co-partitions the edge side at that
+    width (below); the session's shuffle width is left to the caller.
     Exhausting ``max_iters`` without
     convergence raises rather than silently returning wrong labels
     (a path graph longer than ``max_iters`` would otherwise get
     incorrect components with no signal).
     """
-    # ``co_partition`` (r13, the bfs_levels_multi posture): shuffle the
-    # edge side ONCE into the session's current shuffle width keyed on
-    # src and hint the label joins SHUFFLE_HASH — each round then
-    # shuffles only the V-sized label table instead of collecting it
-    # for a broadcast build per round.
+    # ``loop_shuffle_partitions`` (r13, the bfs_levels_multi posture):
+    # shuffle the edge side ONCE into that many partitions keyed on src
+    # and hint the label joins SHUFFLE_HASH — each round then shuffles
+    # only the V-sized label table instead of collecting it for a
+    # broadcast build per round.
+    copart = loop_shuffle_partitions is not None
     e = _edges_only(edges, graph_id)
-    if co_partition:
-        _w = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        e = e.repartition(_w, "src")
+    if copart:
+        e = e.repartition(int(loop_shuffle_partitions), "src")
     e = e.persist()
     converged = False
     try:
@@ -645,7 +636,7 @@ def connected_components(
         probe = max(1, int(probe_every))
         rounds_since_probe = 0
         for i in range(max_iters):
-            llhs = labels.hint("shuffle_hash") if co_partition else labels
+            llhs = labels.hint("shuffle_hash") if copart else labels
             nbr_min = (
                 llhs.join(e, llhs["vertex"] == e["src"])
                 .groupBy(e["dst"].alias("vertex"))
@@ -656,21 +647,6 @@ def connected_components(
                 "component",
                 F.coalesce("nbr_component", "component").alias("_nc"),
             )
-            if pointer_jumping:
-                # L(L(v)): every label IS a vertex id present in
-                # labels, so the lookup join is total; coalesce is
-                # belt only.
-                anc = labels.select(
-                    F.col("vertex").alias("_av"),
-                    F.col("component").alias("_ac"),
-                )
-                cand = cand.join(
-                    anc, cand["component"] == anc["_av"], "left"
-                ).select(
-                    "vertex",
-                    "component",
-                    F.least("_nc", F.coalesce("_ac", "component")).alias("_nc"),
-                )
             new_labels = cand.select(
                 "vertex",
                 F.least("component", "_nc").alias("component"),

@@ -23,7 +23,10 @@ ROOT_VID = 999
 # ``int graphs[10][N][N]``); the Spark rendering is a persisted edge
 # DataFrame shared by every traversal in the session (the GraphX
 # ``graph.cache()`` posture).  Testdata is immutable, so entries never
-# go stale; MEMORY_AND_DISK spills instead of OOMing at scale.
+# go stale; MEMORY_AND_DISK spills instead of OOMing at scale.  Most
+# graph queries read their edge set several times (width-sizing count,
+# warm-up, the loop itself), so the cache pays off within ONE query;
+# bench.py drops it before every timed run (reset_session_caches).
 _EDGE_CACHE: dict[tuple, DataFrame] = {}
 
 

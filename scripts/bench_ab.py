@@ -8,9 +8,8 @@ r7 closing commit), and full bench passes ALTERNATED r7, r8, r7, r8
 so neither arm monopolizes the warm end of the boot.  Per query the
 arm's time is the min over its passes (the bench.py steady-state
 convention); each pass purges the package from sys.modules first, so
-per-session caches (_shared_result families) are rebuilt inside
-every pass — both arms pay their own protocol's build cost, exactly
-as a fresh official bench run would.
+every pass starts from fresh module state — both arms pay their own
+build cost, exactly as a fresh official bench run would.
 
 Usage: python scripts/bench_ab.py [base_commit] [sf_dir] [passes_per_arm]
            [--queries q_a,q_b,...]

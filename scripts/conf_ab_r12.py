@@ -1,8 +1,8 @@
 """Same-boot session-config A/B (round-12 optimization): ONE JVM /
 SparkSession, full bench passes ALTERNATED control vs candidate conf
-set, package modules purged between passes so session caches
-(_shared_result families) rebuild inside every pass — the bench_ab.py
-protocol, but the two arms differ by runtime conf instead of by tree.
+set, package modules purged between passes so every pass starts
+from fresh module state — the bench_ab.py protocol, but the two arms
+differ by runtime conf instead of by tree.
 
 Usage:
   python scripts/conf_ab_r12.py '{"spark.sql.adaptive.coalescePartitions.parallelismFirst": "false"}' \

@@ -41,11 +41,11 @@ def dump(df, name: str) -> None:
     print(name, "written")
 
 
-def pagerank_loop(g, *, co_partition: bool, w: int = 8, iters: int = 2):
+def pagerank_loop(g, *, copart: bool, w: int = 8, iters: int = 2):
     """The pagerank_fixed_both round body, built lazily (2 rounds are
     enough to show the steady-state per-round shape)."""
     ed, deg = g.ed, g.deg
-    if co_partition:
+    if copart:
         ed = ed.repartition(w, "esrc")
         deg = deg.repartition(w, "vertex")
     init, teleport, damping_pct, scale = 1, 1, 85, 10**12
@@ -56,7 +56,7 @@ def pagerank_loop(g, *, co_partition: bool, w: int = 8, iters: int = 2):
         F.lit(init).cast("long").alias("rw"),
     )
     for _ in range(iters):
-        lhs = ranks.hint("shuffle_hash") if co_partition else ranks
+        lhs = ranks.hint("shuffle_hash") if copart else ranks
         sums = (
             lhs.join(ed, lhs["vertex"] == F.col("esrc"))
             .select(
@@ -67,7 +67,7 @@ def pagerank_loop(g, *, co_partition: bool, w: int = 8, iters: int = 2):
             .groupBy("sv")
             .agg(F.sum("cu").alias("su"), F.sum("cw").alias("sw"))
         )
-        dlhs = deg.hint("shuffle_hash") if co_partition else deg
+        dlhs = deg.hint("shuffle_hash") if copart else deg
         ranks = dlhs.join(sums, dlhs["vertex"] == F.col("sv"), "left").select(
             dlhs["vertex"], dlhs["outdeg"], dlhs["outdeg_unit"],
             F.expr(upd.format(s="su")).alias("ru"),
@@ -76,10 +76,10 @@ def pagerank_loop(g, *, co_partition: bool, w: int = 8, iters: int = 2):
     return ranks
 
 
-def cc_round(sym, *, co_partition: bool, w: int = 4, rounds: int = 2):
+def cc_round(sym, *, copart: bool, w: int = 4, rounds: int = 2):
     """The connected_components round body, built lazily."""
     e = sym.select(F.col("src").alias("esrc"), F.col("dst").alias("edst"))
-    if co_partition:
+    if copart:
         e = e.repartition(w, "esrc")
     e = e.persist()
     labels = (
@@ -92,7 +92,7 @@ def cc_round(sym, *, co_partition: bool, w: int = 4, rounds: int = 2):
         .localCheckpoint(eager=True)
     )
     for _ in range(rounds):
-        llhs = labels.hint("shuffle_hash") if co_partition else labels
+        llhs = labels.hint("shuffle_hash") if copart else labels
         nbr_min = (
             llhs.join(e, llhs["vertex"] == e["esrc"])
             .groupBy(e["edst"].alias("vertex"))
@@ -118,8 +118,8 @@ def main() -> None:
     wsym = copurchase_weighted_edges(spark, sf_dir, symmetric=True)
     g = pagerank_prepare(wsym, weight_col="cnt", assume_symmetric=True)
     spark.conf.set("spark.sql.shuffle.partitions", "8")
-    dump(pagerank_loop(g, co_partition=False), "loop_pagerank_broadcast.txt")
-    dump(pagerank_loop(g, co_partition=True), "loop_pagerank_copart.txt")
+    dump(pagerank_loop(g, copart=False), "loop_pagerank_broadcast.txt")
+    dump(pagerank_loop(g, copart=True), "loop_pagerank_copart.txt")
 
     w = copurchase_weighted_edges(spark, sf_dir)
     strong = w.where(F.col("cnt") >= 2).select("src", "dst")
@@ -127,8 +127,8 @@ def main() -> None:
         strong.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
     spark.conf.set("spark.sql.shuffle.partitions", "4")
-    dump(cc_round(sym, co_partition=False), "loop_cc_broadcast.txt")
-    dump(cc_round(sym, co_partition=True), "loop_cc_copart.txt")
+    dump(cc_round(sym, copart=False), "loop_cc_broadcast.txt")
+    dump(cc_round(sym, copart=True), "loop_cc_copart.txt")
 
 
 if __name__ == "__main__":

@@ -115,7 +115,7 @@ def _ivf_cell_stats(spark, sf_dir: str) -> dict:
 
     emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
     _cents_q, cents = similarity.ivf_centroids_trained(
-        emb, n_cells=16, iters=2, cache_key=None
+        emb, n_cells=16, iters=2
     )
     cell = similarity._nearest_cell_arrow(cents)
     counts = (

@@ -3,10 +3,10 @@ time — capture ``explain("formatted")`` to ``plans/r13/<q>_<tag>.txt``
 and time both the bench action (``count()``) and the noop sink
 (guide §1.4: computes every column, no driver transfer).
 
-Unlike the r12 variant, every timed run starts from a clean session
-cache posture (``entrymod.reset_session_caches()`` — the r13 de-gamed
-bench contract), so the numbers here include the shared-base builds a
-query actually pays in the official bench.
+Unlike the r12 variant, every timed run starts with no persisted edge
+table or operator persist (``entrymod.reset_session_caches()`` — the
+de-gamed bench contract), so the numbers here include the shared-base
+builds a query actually pays in the official bench.
 
 Usage:
   python scripts/isolate_r13.py --tag before q_msf q_betweenness ...

@@ -62,6 +62,42 @@ def test_graph_catalog_roundtrip(spark, tmp_path):
     # Graph 1 untouched by the partition overwrite.
     assert edge_set(cat.edges(1)) == edge_set(make_edges(spark, REF_G1, graph_id=1))
 
+def test_graph_catalog_concurrent_writers_keep_each_others_graphs(spark, tmp_path):
+    # Two threads each rewrite their OWN graph id repeatedly.  The
+    # dynamic overwrite is a per-write option, so neither writer can
+    # run a static overwrite that drops the other's partition, and the
+    # shared session conf is never changed.
+    import threading
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    conf_before = spark.conf.get(key)
+    cat = GraphCatalog(spark, str(tmp_path / "gdb"))
+    cat.add_graph(1, pairs_df(spark, REF_G1))
+    cat.add_graph(2, pairs_df(spark, REF_G2))
+    plans = {
+        1: [REF_G3, REF_G2_POST, REF_G1, REF_G3],
+        2: [REF_G1, REF_G3, REF_G2_POST, REF_G1],
+    }
+    errors = []
+
+    def writer(gid):
+        try:
+            for pairs in plans[gid]:
+                cat.modify_graph(gid, pairs_df(spark, pairs))
+        except Exception as exc:  # surfaced below, not lost in the thread
+            errors.append(exc)
+
+    threads = [threading.Thread(target=writer, args=(g,)) for g in plans]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+        assert not t.is_alive()
+    assert not errors, errors
+    for gid, seq in plans.items():
+        assert edge_set(cat.edges(gid)) == edge_set(make_edges(spark, seq[-1], graph_id=gid))
+    assert spark.conf.get(key) == conf_before
+
 def test_route_requests_parity(spark):
     reqs = spark.createDataFrame(
         [(1, 1, "G1.txt", None), (2, 2, "G1.txt", None),

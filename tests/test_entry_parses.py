@@ -163,127 +163,79 @@ def test_survey_inventory_lists_every_query():
     assert not missing, f"queries missing from SURVEY.md: {sorted(missing)}"
 
 
-def test_evict_other_sf_releases_previous_sweep():
-    """Session caches are keyed (applicationId, sf_dir); switching
-    sf_dir must drop AND unpersist the previous scale's entries
-    (round-3 ADVICE made this load-bearing for long driver sessions).
-    Sweep sf0.001 then sf0.01 and assert no sf0.001 cache entry — and
-    no lingering persisted edge table — survives the switch.
+def test_bucketed_table_repeat_calls_leave_one_table_and_no_tmpdir(monkeypatch):
+    """q_bucketed_table publishes to one table at a fixed location,
+    overwriting it: two calls in one session leave exactly one
+    bucketed table, create no temp directory, and return the same
+    rows."""
+    import tempfile
 
-    Runs against the process's active session (getOrCreate — in a
-    full-suite run this IS the shared conftest session, which mirrors
-    the long-lived driver session the eviction exists for; the caches
-    it sweeps are keyed by this applicationId either way)."""
     import pytest
     from pyspark.sql import SparkSession
 
-    sf_a, sf_b = "/root/testdata/sf0.001", "/root/testdata/sf0.01"
-    if not (os.path.isdir(sf_a) and os.path.isdir(sf_b)):
+    sf = "/root/testdata/sf0.001"
+    if not os.path.isdir(sf):
         pytest.skip("driver testdata not present")
 
-    from distributed_graph_database_simulation_with_load_balancing_and_threaded_request_handling__spark.sources import (
-        graphs,
-    )
+    def no_mkdtemp(*a, **k):
+        raise AssertionError("q_bucketed_table created a temp directory")
+
+    spark = SparkSession.builder.master("local[4]").getOrCreate()
+    q = entry.queries()["q_bucketed_table"]
+    monkeypatch.setattr(tempfile, "mkdtemp", no_mkdtemp)
+    first = sorted(map(tuple, q(spark, sf).collect()))
+    second = sorted(map(tuple, q(spark, sf).collect()))
+    assert first == second and first
+    bucketed = [
+        t.name for t in spark.catalog.listTables() if t.name.startswith("docs_bucketed")
+    ]
+    assert bucketed == ["docs_bucketed"]
+
+
+def test_formerly_memoized_pairs_share_no_module_state():
+    """The pairs that once shared an entry-level memo return the same
+    rows in either order, and the entry module holds no module-level
+    container of DataFrames afterwards (no implicit session memo)."""
+    import pytest
+    from pyspark.sql import DataFrame, SparkSession
+
+    sf = "/root/testdata/sf0.001"
+    if not os.path.isdir(sf):
+        pytest.skip("driver testdata not present")
 
     spark = SparkSession.builder.master("local[4]").getOrCreate()
     qs = entry.queries()
-    qs["q_bfs_levels"](spark, sf_a).count()
-    assert any(k[1] == sf_a for k in entry._TREE_LEVELS_CACHE)
-    edges_a = next(v for k, v in graphs._EDGE_CACHE.items() if k[1] == sf_a)
-    assert edges_a.storageLevel.useMemory  # persisted while current
 
-    qs["q_bfs_levels"](spark, sf_b).count()
-    all_caches = (
-        entry._TREE_LEVELS_CACHE,
-        entry._RECALL_PAIRS_CACHE,
-        entry._PAGERANK_GRAPH_CACHE,
-        entry._KMEANS_CACHE,
-        entry._COMMUNITIES_CACHE,
-        entry._APPROX_RESULT_CACHE,
-        graphs._EDGE_CACHE,
-    )
-    stale = [k for cache in all_caches for k in cache if k[1] == sf_a]
-    assert not stale, f"sf0.001 cache entries survived the sf switch: {stale}"
-    # The previous scale's persisted edge table must be UNPERSISTED
-    # (storage level NONE), not merely dropped from the dict — that is
-    # what actually releases executor memory.  (The BFS loop's
-    # localCheckpoint blocks are released asynchronously by the
-    # ContextCleaner once the popped references die; persisted tables
-    # are the synchronous, assertable part.)
-    assert not edges_a.storageLevel.useMemory
-    assert not edges_a.storageLevel.useDisk
+    def rows(name):
+        return sorted(map(tuple, qs[name](spark, sf).collect()))
 
+    for a, b in (
+        ("q_bfs_levels", "q_bfs_order"),
+        ("q_pagerank", "q_pagerank_weighted"),
+        ("q_pq_topk", "q_pq_recall"),
+    ):
+        ra, rb = rows(a), rows(b)
+        entry.reset_session_caches()
+        assert rows(b) == rb, b
+        assert rows(a) == ra, a
+        assert ra and rb
 
-def test_evict_other_sf_drops_bucketed_table_and_dir():
-    """Round-5 advice: bucketed-table cache entries must be fully
-    reclaimed on sf switch — DROP TABLE (metastore) AND rmtree (the
-    mkdtemp parquet dir), not just popped from the dict."""
-    import pytest
-    from pyspark.sql import SparkSession
+    def frames(v):
+        if isinstance(v, dict):
+            v = list(v.keys()) + list(v.values())
+        if isinstance(v, (list, tuple, set)):
+            return [x for x in v if isinstance(x, DataFrame) or frames(x)]
+        return []
 
-    sf_a, sf_b = "/root/testdata/sf0.001", "/root/testdata/sf0.01"
-    if not (os.path.isdir(sf_a) and os.path.isdir(sf_b)):
-        pytest.skip("driver testdata not present")
-
-    spark = SparkSession.builder.master("local[4]").getOrCreate()
-    entry.queries()["q_bucketed_table"](spark, sf_a).count()
-    key_a = next(k for k in entry._BUCKETED_TABLE_CACHE if k[1] == sf_a)
-    name_a, dir_a = entry._BUCKETED_TABLE_CACHE[key_a]
-    assert spark.catalog.tableExists(name_a)
-    assert os.path.isdir(dir_a)
-
-    entry.queries()["q_bucketed_table"](spark, sf_b).count()
-    assert not any(k[1] == sf_a for k in entry._BUCKETED_TABLE_CACHE)
-    assert not spark.catalog.tableExists(name_a)
-    assert not os.path.isdir(dir_a)
-
-
-def test_reset_session_caches_clears_every_memo():
-    """Round-12 verdict #1 (gaming): bench best-of-N timing must not
-    see session memos — reset_session_caches() must empty all nine
-    entry-level caches AND the persisted edge tables, unpersisting
-    DataFrames so executor memory is actually released."""
-    import pytest
-    from pyspark.sql import SparkSession
-
-    sf_a = "/root/testdata/sf0.001"
-    if not os.path.isdir(sf_a):
-        pytest.skip("driver testdata not present")
-
-    from distributed_graph_database_simulation_with_load_balancing_and_threaded_request_handling__spark.sources import (
-        graphs,
-    )
-
-    spark = SparkSession.builder.master("local[4]").getOrCreate()
-    qs = entry.queries()
-    qs["q_bfs_levels"](spark, sf_a).count()
-    assert entry._TREE_LEVELS_CACHE and graphs._EDGE_CACHE
-    edges = next(iter(graphs._EDGE_CACHE.values()))
-
-    entry.reset_session_caches()
-    for cache in entry._SESSION_CACHES:
-        assert not cache, f"cache survived reset: {cache}"
-    assert not graphs._EDGE_CACHE
-    assert not edges.storageLevel.useMemory
-    assert not edges.storageLevel.useDisk
-
-
-def test_reset_session_caches_purges_ann_artifact_store(tmp_path, monkeypatch):
-    """The trained-artifact store is a CROSS-RUN disk memo keyed on the
-    testdata fingerprint — the de-gamed bench must retrain, not load
-    round N-1's training from disk."""
-    store = tmp_path / "ann_cache"
-    store.mkdir()
-    (store / "pq_books_deadbeef.json").write_text("{}")
-    monkeypatch.setenv("SPARK_GRAFT_ANN_CACHE", str(store))
-    entry.reset_session_caches()
-    assert not store.exists()
+    held = {k: v for k, v in vars(entry).items() if frames(v)}
+    assert not held, f"module-level DataFrame containers: {sorted(held)}"
 
 
 def test_bench_times_cold_runs_and_writes_per_cpus_full_map():
     """Pin the two round-12 verdict fixes in bench.py source: (1) the
-    inner timing loop resets the session caches before each timed run
-    (de-gamed best-of-N), and (2) the full per-query map goes to a
+    inner timing loop drops persisted edge tables and operator persists
+    (reset_session_caches) before each timed run (de-gamed best-of-N),
+    and (2) the full per-query map goes to a
     per-core-count file so a scaling re-run cannot clobber it."""
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     src = open(os.path.join(root, "bench.py")).read()

@@ -1368,77 +1368,6 @@ def test_ivf_pq_trained_cells_topk(embeddings):
         ivf_pq_topk(embeddings, QUERY, 5, cell_iters=1, train_iters=0)
 
 
-def test_trained_artifact_store_load_equals_train(embeddings, tmp_path, monkeypatch):
-    """Round-8 verdict #4: trained centroids/codebooks persist to the
-    versioned artifact store, and a LOAD is bit-identical to a fresh
-    TRAIN (only the int64 arrays are stored; the float views are
-    recomputed by the same exact q / SCALE - offset expression).  The
-    second half proves the hit path really skips training by making
-    the Lloyd's kernels raise."""
-    import numpy as np
-    import pytest
-
-    from distributed_graph_database_simulation_with_load_balancing_and_threaded_request_handling__spark.operators import (
-        clustering,
-        similarity,
-    )
-
-    monkeypatch.setenv("SPARK_GRAFT_ANN_CACHE", str(tmp_path))
-
-    # --- coarse quantizer ---
-    q0, f0 = similarity.ivf_centroids_trained(embeddings, n_cells=8, iters=2)
-    q1, f1 = similarity.ivf_centroids_trained(
-        embeddings, n_cells=8, iters=2, cache_key="tbl-v1"
-    )  # miss: trains + persists
-    assert (q1, f1) == (q0, f0)
-    assert list(tmp_path.glob("ivf_cents_*.json"))
-    q2, f2 = similarity.ivf_centroids_trained(
-        embeddings, n_cells=8, iters=2, cache_key="tbl-v1"
-    )  # hit: loads
-    assert (q2, f2) == (q0, f0)
-
-    # --- residual codebooks (trained cells feed trained books) ---
-    b0, fb0 = similarity.pq_codebooks_trained(
-        embeddings, m=4, n_codes=8, train_iters=2, cents=f0, cents_q=q0
-    )
-    b1, fb1 = similarity.pq_codebooks_trained(
-        embeddings, m=4, n_codes=8, train_iters=2, cents=f1, cents_q=q1,
-        cache_key="tbl-v1",
-    )
-    assert np.array_equal(b1, b0) and fb1 == fb0
-    assert list(tmp_path.glob("pq_books_*.json"))
-    b2, fb2 = similarity.pq_codebooks_trained(
-        embeddings, m=4, n_codes=8, train_iters=2, cents=f1, cents_q=q1,
-        cache_key="tbl-v1",
-    )
-    assert np.array_equal(b2, b0) and fb2 == fb0
-
-    # --- the hit path runs ZERO training passes ---
-    def boom(*a, **k):
-        raise AssertionError("training ran on a cache hit")
-
-    monkeypatch.setattr(clustering, "_lloyd_rounds", boom)
-    monkeypatch.setattr(similarity, "_pq_train_lloyd", boom)
-    q3, f3 = similarity.ivf_centroids_trained(
-        embeddings, n_cells=8, iters=2, cache_key="tbl-v1"
-    )
-    assert (q3, f3) == (q0, f0)
-    b3, fb3 = similarity.pq_codebooks_trained(
-        embeddings, m=4, n_codes=8, train_iters=2, cents=f0, cents_q=q0,
-        cache_key="tbl-v1",
-    )
-    assert np.array_equal(b3, b0) and fb3 == fb0
-    # ...and a DIFFERENT key / config is a miss that would train.
-    with pytest.raises(AssertionError, match="training ran"):
-        similarity.ivf_centroids_trained(
-            embeddings, n_cells=8, iters=2, cache_key="tbl-v2"
-        )
-    with pytest.raises(AssertionError, match="training ran"):
-        similarity.ivf_centroids_trained(
-            embeddings, n_cells=8, iters=3, cache_key="tbl-v1"
-        )
-
-
 def test_jpeg_decode_robust_to_fill_bytes_and_truncation():
     """Round-8 ADVICE: the decoder is exposed to arbitrary payload
     bytes.  A truncated stream — including one ending in 0xFF — must

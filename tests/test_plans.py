@@ -549,9 +549,7 @@ def test_pq_scoring_is_code_only_jvm_with_topk(spark):
     # marker on the IVF-PQ encode UDF, Catalyst pushes the probe-cell
     # filter below the code projection and extracts a second
     # evaluation — the encode would run twice per row.  Pinned on the
-    # OPERATOR build plans directly: the declared queries now return
-    # the session-cached materialization (_APPROX_RESULT_CACHE), whose
-    # InMemoryRelation plan text duplicates the cached tree.
+    # OPERATOR build plans directly.
     import os as _os
 
     from distributed_graph_database_simulation_with_load_balancing_and_threaded_request_handling__spark.operators.similarity import (
@@ -564,11 +562,11 @@ def test_pq_scoring_is_code_only_jvm_with_topk(spark):
         float(x)
         for x in emb.where(emb["vec_id"] == 0).first()["embedding"]
     ]
-    # k=9, not the declared k=10: the declared queries persist their
-    # k=10 builds (_APPROX_RESULT_CACHE), and Spark's CacheManager
-    # substitutes ANY canonically-equal plan with the InMemoryRelation
-    # (whose printed text duplicates the tree) — a non-matching k pins
-    # the raw build plan regardless of test order.
+    # k=9, not the declared k=10: if a canonically-equal plan were
+    # persisted elsewhere in the session, Spark's CacheManager would
+    # substitute an InMemoryRelation (whose printed text duplicates the
+    # tree) — a non-matching k pins the raw build plan regardless of
+    # test order.
     builds = {
         "pq_topk": pq_topk(emb, qvec, 9, m=16, n_codes=128),
         "ivf_pq_topk": ivf_pq_topk(emb, qvec, 9, n_codes=128),

@@ -45,13 +45,19 @@ def test_tracked_persists_release_on_demand(spark):
 
 
 def test_reset_session_caches_releases_tracked_persists(spark):
-    """The bench's per-run reset must sweep the operator persists too."""
+    """The bench's reset before each timed run must release the
+    operator persists AND drop + unpersist the persisted edge tables."""
+    import os
+
     import __spark_entry__ as entry
     from distributed_graph_database_simulation_with_load_balancing_and_threaded_request_handling__spark.operators import (
         persists,
     )
     from distributed_graph_database_simulation_with_load_balancing_and_threaded_request_handling__spark.operators.dedup import (
         simhash_dedup,
+    )
+    from distributed_graph_database_simulation_with_load_balancing_and_threaded_request_handling__spark.sources import (
+        graphs,
     )
 
     docs = spark.createDataFrame(
@@ -60,5 +66,15 @@ def test_reset_session_caches_releases_tracked_persists(spark):
     )
     simhash_dedup(docs).collect()
     assert persists._LIVE
+    sf = "/root/testdata/sf0.001"
+    edges = None
+    if os.path.isdir(sf):
+        edges = graphs.derived_tree_edges(spark, sf)
+        edges.count()
+        assert edges.storageLevel.useMemory
     entry.reset_session_caches()
     assert not persists._LIVE
+    assert not graphs._EDGE_CACHE
+    if edges is not None:
+        assert not edges.storageLevel.useMemory
+        assert not edges.storageLevel.useDisk

@@ -171,34 +171,6 @@ def test_connected_components_forest(spark):
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10, 13: 10}
 
 
-def test_connected_components_pointer_jumping_logarithmic(spark):
-    """Path doubling must (a) compute the identical fixpoint and (b)
-    converge in O(log diameter) rounds: a 40-vertex path has diameter
-    39, far past max_iters=12 for plain hash-min, but pointer jumping
-    finishes inside it (chain depth halves per round)."""
-    import pytest
-
-    from distributed_graph_database_simulation_with_load_balancing_and_threaded_request_handling__spark.operators.traverse import (
-        connected_components,
-    )
-
-    path = [(i, i + 1) for i in range(1, 40)] + [(100, 101), (101, 102), (100, 102)]
-    e = make_edges(spark, path, graph_id=1)
-    plain = {
-        (r.vertex, r.component) for r in connected_components(e, graph_id=1).collect()
-    }
-    pj = {
-        (r.vertex, r.component)
-        for r in connected_components(
-            e, graph_id=1, pointer_jumping=True, max_iters=12
-        ).collect()
-    }
-    assert pj == plain
-    # plain hash-min genuinely cannot make 12 rounds on this diameter
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(e, graph_id=1, max_iters=12)
-
-
 def test_connected_components_probe_chaining_same_fixpoint(spark):
     # probe_every chains rounds between convergence probes; the
     # fixpoint (min id per component) must be identical for any
@@ -274,11 +246,12 @@ def test_bfs_levels_multi_probe_chaining_same_levels(spark):
 
 
 def test_bfs_levels_multi_co_partition_same_levels(spark):
-    # r13 co-partitioned loop: pre-shuffling the edge side and forcing
-    # the SHUFFLE_HASH expansion join is a pure plan change — every
-    # (start, vertex, level) row and the superstep count must match
-    # the broadcast-join loop exactly (combined with probe chaining,
-    # the q_assignment_replay configuration).
+    # r13 co-partitioned loop: pre-shuffling the edge side into
+    # loop_shuffle_partitions (here 3, unlike the session's 4) and
+    # forcing the SHUFFLE_HASH expansion join is a pure plan change —
+    # every (start, vertex, level) row and the superstep count must
+    # match the broadcast-join loop exactly (combined with probe
+    # chaining, the q_assignment_replay configuration).
     from distributed_graph_database_simulation_with_load_balancing_and_threaded_request_handling__spark.operators.loopstats import (
         LOOP_STATS,
     )
@@ -296,7 +269,7 @@ def test_bfs_levels_multi_co_partition_same_levels(spark):
     got = {
         (r["start"], r["vertex"], r["level"])
         for r in bfs_levels_multi(
-            edges, src, probe_every=3, co_partition=True
+            edges, src, probe_every=3, loop_shuffle_partitions=3
         ).collect()
     }
     assert got == base
